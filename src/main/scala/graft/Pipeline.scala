@@ -7,7 +7,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.checkpoint.{Fingerprint, LineageStore}
-import graft.functions.KvParse
 import graft.model.PipelineConfig
 import graft.operators.{Enrich, Parse, Route}
 import graft.sources.TranscriptTable
@@ -90,7 +89,6 @@ object Pipeline {
       outDir: String): RunReport = {
 
     cfg.validate().left.foreach(err => throw new IllegalArgumentException(err))
-    KvParse.register(spark)
     val runId = java.util.UUID.randomUUID().toString.take(12)
 
     val snapId = table.currentSnapshotId.getOrElse(

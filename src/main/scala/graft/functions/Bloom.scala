@@ -1,16 +1,16 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftshim.Native
 
 /** Spark's internal runtime-row-filter bloom machinery
   * (`BloomFilterAggregate` / `BloomFilterMightContain`, the expressions
-  * `InjectRuntimeFilter` plants under shuffle joins) surfaced as callable
-  * functions — they are not in the public FunctionRegistry. Registration
-  * follows the KvParse pattern (functionRegistry + call_function; the
-  * source string must be "scala_udf").
+  * `InjectRuntimeFilter` plants under shuffle joins) surfaced as Columns —
+  * they are not in the public FunctionRegistry, but the Catalyst classes
+  * are public, so they are built directly through [[Native]].
   *
   * Scale role: a decontamination / semi-join pre-filter. When the build
   * side outgrows the broadcast threshold, a bloom of its 8-byte shingle
@@ -21,14 +21,10 @@ import org.apache.spark.sql.functions._
   */
 object Bloom {
 
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("bloom_filter_agg",
-      exprs => new BloomFilterAggregate(exprs(0), exprs(1), exprs(2))
-        .toAggregateExpression(), "scala_udf")
-    reg.createOrReplaceTempFunction("bloom_might_contain",
-      exprs => BloomFilterMightContain(exprs(0), exprs(1)), "scala_udf")
-  }
+  /** Aggregate Column: the serialized bloom filter of the long hashes `h`. */
+  def aggregate(h: Column, expectedItems: Long, numBits: Long): Column =
+    Native.column(new BloomFilterAggregate(Native.expr(h),
+      Literal(expectedItems), Literal(numBits)).toAggregateExpression())
 
   /** Serialized bloom filter of `df(hashCol)` (long hashes), built by one
     * distributed aggregate and returned to the driver — the sketch-sized
@@ -36,16 +32,13 @@ object Bloom {
     * driver holds numBits/8 bytes, never the hash set.
     */
   def fit(df: DataFrame, hashCol: String, expectedItems: Long,
-      numBits: Long): Array[Byte] = {
-    register(df.sparkSession)
-    df.agg(call_function("bloom_filter_agg", col(hashCol),
-      lit(expectedItems), lit(numBits)).as("bf"))
+      numBits: Long): Array[Byte] =
+    df.agg(aggregate(col(hashCol), expectedItems, numBits).as("bf"))
       .head().getAs[Array[Byte]](0)
-  }
 
   /** Probe column: true when `h` may be in the fitted filter (exact
     * verification must follow; no false negatives).
     */
   def mightContain(bloom: Array[Byte], h: Column): Column =
-    call_function("bloom_might_contain", lit(bloom), h)
+    Native.column(BloomFilterMightContain(Literal(bloom), Native.expr(h)))
 }

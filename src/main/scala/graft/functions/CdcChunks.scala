@@ -1,10 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graftshim.Native
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -109,11 +110,6 @@ case class CdcChunks(child: Expression, w: Int, d: Long) extends UnaryExpression
 }
 
 object CdcChunks {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cdc_chunks",
-      exprs => CdcChunks(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue(),
-        exprs(2).eval().asInstanceOf[Number].longValue()),
-      "scala_udf")
+  def of(text: Column, w: Int, d: Long): Column =
+    Native.column(CdcChunks(Native.expr(text), w, d))
 }

@@ -2,10 +2,11 @@ package graft.functions
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData, MapData}
+import org.apache.spark.sql.graftshim.Native
 import org.apache.spark.sql.types.{DataType, MapType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -100,8 +101,9 @@ case class KvParse(child: Expression) extends UnaryExpression {
 }
 
 object KvParse {
-  /** Register `kv_parse(str) -> map<string,string>` for use via `expr(...)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "kv_parse", exprs => KvParse(exprs.head), "scala_udf")
+  /** `kv_parse(text) -> map<string,string>` as a Column. */
+  def of(text: Column): Column = Native.column(KvParse(Native.expr(text)))
+
+  // no-op: nothing to register; kept for the frozen callers SparkEntry.entry and Bench
+  def register(spark: SparkSession): Unit = ()
 }

@@ -1,9 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graftshim.Native
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** Banded MinHash values of a hashed-shingle set in ONE native pass:
@@ -89,11 +90,6 @@ case class MinhashBands(child: Expression, bands: Int, rowsPerBand: Int)
 }
 
 object MinhashBands {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_bands",
-      exprs => MinhashBands(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue(),
-        exprs(2).eval().asInstanceOf[Number].intValue()),
-      "scala_udf")
+  def of(hashes: Column, bands: Int, rowsPerBand: Int): Column =
+    Native.column(MinhashBands(Native.expr(hashes), bands, rowsPerBand))
 }

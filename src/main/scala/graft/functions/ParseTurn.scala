@@ -1,9 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.graftshim.Native
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -83,7 +84,5 @@ case class ParseTurn(child: Expression) extends UnaryExpression {
 }
 
 object ParseTurn {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "parse_turn", exprs => ParseTurn(exprs.head), "scala_udf")
+  def of(text: Column): Column = Native.column(ParseTurn(Native.expr(text)))
 }

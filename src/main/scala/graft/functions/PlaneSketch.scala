@@ -1,9 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graftshim.Native
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** All hyperplane band sketches of one embedding in a single native pass.
@@ -78,13 +79,6 @@ case class PlaneSketch(child: Expression, bands: Int, planesPerBand: Int)
 }
 
 object PlaneSketch {
-  /** Registers `plane_sketch_<bands>_<ppb>` for one geometry (the registry
-    * builder only sees child expressions, so geometry rides in the name).
-    */
-  def register(spark: SparkSession, bands: Int, planesPerBand: Int): String = {
-    val name = s"plane_sketch_${bands}_$planesPerBand"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => PlaneSketch(exprs.head, bands, planesPerBand), "scala_udf")
-    name
-  }
+  def of(v: Column, bands: Int, planesPerBand: Int): Column =
+    Native.column(PlaneSketch(Native.expr(v), bands, planesPerBand))
 }

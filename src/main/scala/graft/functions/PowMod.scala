@@ -1,8 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.graftshim.Native
 import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Modular exponentiation `pow_mod(base, exp)` → `base^exp mod P` by
@@ -49,7 +50,6 @@ case class PowMod(left: Expression, right: Expression)
 }
 
 object PowMod {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pow_mod", exprs => PowMod(exprs.head, exprs(1)), "scala_udf")
+  def of(base: Column, exp: Column): Column =
+    Native.column(PowMod(Native.expr(base), Native.expr(exp)))
 }

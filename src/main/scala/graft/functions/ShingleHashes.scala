@@ -1,9 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graftshim.Native
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -78,10 +79,6 @@ case class ShingleHashes(child: Expression, n: Int) extends UnaryExpression {
 }
 
 object ShingleHashes {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingle_hashes",
-      exprs => ShingleHashes(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue()),
-      "scala_udf")
+  def of(text: Column, n: Int): Column =
+    Native.column(ShingleHashes(Native.expr(text), n))
 }

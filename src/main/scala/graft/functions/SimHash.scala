@@ -1,8 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.graftshim.Native
 import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -78,7 +79,9 @@ case class SimHash(child: Expression) extends UnaryExpression {
 }
 
 object SimHash {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64", exprs => SimHash(exprs.head), "scala_udf")
+  /** `simhash64(text) -> long` as a Column. */
+  def of(text: Column): Column = Native.column(SimHash(Native.expr(text)))
+
+  // no-op: nothing to register; kept for the frozen caller Bench.session
+  def register(spark: SparkSession): Unit = ()
 }

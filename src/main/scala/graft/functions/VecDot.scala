@@ -1,9 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graftshim.Native
 import org.apache.spark.sql.types.{DataType, DoubleType}
 
 /** Dot product of two double vectors in ONE native pass:
@@ -13,9 +14,10 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * `aggregate(zip_with(a, b, (x, y) => x*y), 0.0, (acc, x) => acc + x)` —
   * the same left-to-right fold of the same products, and null when the
   * lengths differ (zip_with pads with a null element, which nulls the
-  * interpreted sum). Higher-order functions run INTERPRETED per element;
-  * on the embedding near-dup verification (372k candidate pairs × 32
-  * dims at sf0.1) the lambda machinery was the dominant cost. Codegen by
+  * interpreted sum) or when either side holds a null element.
+  * Higher-order functions run INTERPRETED per element; on the embedding
+  * near-dup verification (372k candidate pairs × 32 dims at sf0.1) the
+  * lambda machinery was the dominant cost. Codegen by
   * static call, the [[KvParse]] pattern. [[graft.operators.Similarity]]
   * routes both `dot` and `l2norm` (= sqrt(dot(v, v)) — identical
   * arithmetic to its previous x*x fold) through this.
@@ -26,7 +28,11 @@ object VecDotHelper {
     if (n != b.numElements()) return null
     var acc = 0.0
     var i = 0
-    while (i < n) { acc = acc + a.getDouble(i) * b.getDouble(i); i += 1 }
+    while (i < n) {
+      if (a.isNullAt(i) || b.isNullAt(i)) return null
+      acc = acc + a.getDouble(i) * b.getDouble(i)
+      i += 1
+    }
     acc
   }
 }
@@ -40,8 +46,8 @@ case class VecDot(left: Expression, right: Expression) extends BinaryExpression 
     VecDotHelper.eval(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // the helper can return null (length mismatch), so the generated code
-    // must re-check — defineCodeGen assumes non-null results
+    // the helper can return null (length mismatch, null element), so the
+    // generated code must re-check — defineCodeGen assumes non-null results
     nullSafeCodeGen(ctx, ev, (a, b) => {
       s"""
          |Object r = graft.functions.VecDotHelper.eval($a, $b);
@@ -57,7 +63,6 @@ case class VecDot(left: Expression, right: Expression) extends BinaryExpression 
 }
 
 object VecDot {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot", exprs => VecDot(exprs.head, exprs(1)), "scala_udf")
+  def of(a: Column, b: Column): Column =
+    Native.column(VecDot(Native.expr(a), Native.expr(b)))
 }

@@ -1,9 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graftshim.Native
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -103,11 +104,6 @@ case class WinnowHashes(child: Expression, k: Int, w: Int)
 }
 
 object WinnowHashes {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "winnow_hashes",
-      exprs => WinnowHashes(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue(),
-        exprs(2).eval().asInstanceOf[Number].intValue()),
-      "scala_udf")
+  def of(text: Column, k: Int, w: Int): Column =
+    Native.column(WinnowHashes(Native.expr(text), k, w))
 }

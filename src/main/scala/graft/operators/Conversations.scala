@@ -150,7 +150,6 @@ object Conversations {
   def fingerprintSalted(transcripts: DataFrame,
       bucketWidth: Int = 4096): DataFrame = {
     require(bucketWidth >= 1, s"bucketWidth must be >= 1: $bucketWidth")
-    graft.functions.PowMod.register(transcripts.sparkSession)
     val P = graft.functions.Hashing.P
     val h = (graft.functions.Hashing.sha60(
       concat(col("role"), lit(":"), col("text"))) % P)
@@ -170,7 +169,7 @@ object Conversations {
       .agg(sort_array(collect_list("__p")).as("__ps"))
       .select(col("conv_id"),
         aggregate(col("__ps"), lit(0L),
-          (acc, p) => (acc * call_function("pow_mod", lit(8191L),
+          (acc, p) => (acc * graft.functions.PowMod.of(lit(8191L),
             p.getField("n_b")) + p.getField("fp_b")) % P).as("conv_fp"),
         aggregate(transform(col("__ps"), p => p.getField("n_b")), lit(0L),
           (acc, x) => acc + x).as("n_turns"))

@@ -653,12 +653,10 @@ object Dedup {
     * tokens → hashes → folds → distinct per row, so the evaluate-once
     * guarantee is structural — no CollapseProject-era Generate barrier.
     */
-  def shingleHashSets(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
-    graft.functions.ShingleHashes.register(df.sparkSession)
+  def shingleHashSets(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
     df.select(col(idCol).as("id"),
-        call_function("shingle_hashes", col(textCol), lit(n)).as("hs"))
+        graft.functions.ShingleHashes.of(col(textCol), n).as("hs"))
       .filter(size(col("hs")) > 0)
-  }
 
   /** Cross-document EXACT n-gram duplication coverage — the reporting face
     * of exact-substring dedup (Lee et al. 2022, "Deduplicating Training
@@ -710,11 +708,10 @@ object Dedup {
     */
   def winnowCoverage(df: DataFrame, idCol: String, textCol: String,
       k: Int, w: Int): DataFrame = {
-    graft.functions.WinnowHashes.register(df.sparkSession)
     val base = df.select(col(idCol).as("doc_id"),
         (size(graft.operators.TextAnalysis.tokens(col(textCol))) - lit(k - 1))
           .cast("long").as("n_kgrams"),
-        call_function("winnow_hashes", col(textCol), lit(k), lit(w)).as("fps"))
+        graft.functions.WinnowHashes.of(col(textCol), k, w).as("fps"))
       .filter(size(col("fps")) > 0)
     val ex = base.select(col("doc_id"), explode(col("fps")).as("f"))
     val shared = ex.groupBy(col("f")).agg(count(lit(1)).as("docs"))
@@ -820,9 +817,8 @@ object Dedup {
     */
   def cdcChunks(df: DataFrame, idCol: String, textCol: String,
       w: Int = 3, d: Long = 8L): DataFrame = {
-    graft.functions.CdcChunks.register(df.sparkSession)
     df.select(col(idCol),
-        posexplode(call_function("cdc_chunks", col(textCol), lit(w), lit(d)))
+        posexplode(graft.functions.CdcChunks.of(col(textCol), w, d))
           .as(Seq("chunk_idx", "__ch")))
       .select(col(idCol), col("chunk_idx"),
         col("__ch.n_tok").as("n_tok"), col("__ch.chunk_hash").as("chunk_hash"))
@@ -906,9 +902,8 @@ object Dedup {
     * interpreted higher-order-function transforms.
     */
   private def bandRowsOf(sets: DataFrame, bands: Int, rowsPerBand: Int): DataFrame = {
-    graft.functions.MinhashBands.register(sets.sparkSession)
     sets.select(col("id"), posexplode(
-      call_function("minhash_bands", col("hs"), lit(bands), lit(rowsPerBand)))
+      graft.functions.MinhashBands.of(col("hs"), bands, rowsPerBand))
       .as(Seq("band", "bhash")))
   }
 
@@ -1167,9 +1162,9 @@ object Dedup {
   }
 
   /** 60-bit SimHash fingerprint — native single-pass expression
-    * ([[graft.functions.SimHash]], registered as `simhash64`).
+    * ([[graft.functions.SimHash]]).
     */
-  def simhash(text: Column): Column = call_function("simhash64", text)
+  def simhash(text: Column): Column = graft.functions.SimHash.of(text)
 
   /** Hamming distance between two fingerprints. */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
@@ -1212,8 +1207,8 @@ object Dedup {
     // vectors rejoin after distinct, so the corpus×corpus candidate
     // shuffle moves 3 longs per row, not 2×dims doubles
     val blocks = withNorm.select(col("id"),
-      posexplode(Similarity.allBandSketches(df.sparkSession, col("v"),
-        bands, planesPerBand)).as(Seq("band", "sk")))
+      posexplode(Similarity.allBandSketches(col("v"), bands, planesPerBand))
+        .as(Seq("band", "sk")))
     val pairs = blocks.as("l").join(blocks.as("r"),
         col("l.band") === col("r.band") && col("l.sk") === col("r.sk") &&
           col("l.id") < col("r.id"))

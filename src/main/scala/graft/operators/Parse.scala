@@ -28,8 +28,7 @@ object Parse {
     // which pays a String+Matcher allocation — the allocation rate is what
     // stops the job scaling with cores). Whole-stage codegen CSEs the
     // repeated parse_turn(text) into one evaluation per row.
-    graft.functions.ParseTurn.register(df.sparkSession)
-    val p = call_function("parse_turn", col("text"))
+    val p = graft.functions.ParseTurn.of(col("text"))
     // one projection, not five chained withColumns: each withColumn is an
     // analyzed Dataset of its own, and this plan is re-built per bench
     // iteration — planning cost is part of the measured fixed per-job
@@ -95,7 +94,7 @@ object Parse {
       .withColumn("epoch_sec", when(headHit, regexp_extract(t, auditHeadRe, 2).cast("long")))
       .withColumn("epoch_nsec", when(headHit, nsec))
       .withColumn("serial", when(headHit, regexp_extract(t, auditHeadRe, 4).cast("long")))
-      .withColumn("fields", when(col("audit_hit"), call_function("kv_parse", rest)))
+      .withColumn("fields", when(col("audit_hit"), graft.functions.KvParse.of(rest)))
   }
 
   // ---------------------------------------------------------------- dmesg

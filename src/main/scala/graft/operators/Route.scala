@@ -87,16 +87,19 @@ object Route {
         lit(0L).as("rows_delivered"), lit(0L).as("bytes_delivered"))
     if (rules.isEmpty) return empty
     val len = length(col("text")).cast("long")
-    val aggs = rules.flatMap { r =>
+    // internal columns are named by rule position, so a sink name (config
+    // text such as "errors.v2") never becomes a Spark identifier
+    val aggs = rules.zipWithIndex.flatMap { case (r, i) =>
       val p = sinkPredicate(r, col("text"))
-      Seq(sum(when(p, 1L).otherwise(0L)).as(s"__c_${r.name}"),
-        sum(when(p, len).otherwise(0L)).as(s"__b_${r.name}"))
+      Seq(sum(when(p, 1L).otherwise(0L)).as(s"__c_$i"),
+        sum(when(p, len).otherwise(0L)).as(s"__b_$i"))
     }
     routedDf.groupBy(col("route_key")).agg(aggs.head, aggs.tail: _*)
-      .select(col("route_key"), explode(array(rules.map(r =>
+      .select(col("route_key"), explode(array(rules.zipWithIndex.map { case (r, i) =>
         struct(lit(r.name).as("sink"),
-          col(s"__c_${r.name}").as("rows_delivered"),
-          col(s"__b_${r.name}").as("bytes_delivered"))): _*)).as("__s"))
+          col(s"__c_$i").as("rows_delivered"),
+          col(s"__b_$i").as("bytes_delivered"))
+      }: _*)).as("__s"))
       .filter(col("__s.rows_delivered") > 0)
       .select(col("__s.sink").as("sink"), col("route_key"),
         col("__s.rows_delivered").as("rows_delivered"),

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{SimHash, SimHashHelper}
+import graft.functions.SimHashHelper
 import graft.operators.Dedup
 
 class DedupSpec extends AnyFunSuite {
@@ -371,9 +371,8 @@ class DedupSpec extends AnyFunSuite {
     val colForm = sets.select($"id",
         posexplode(array((0 until bands).map(bandValue): _*)).as(Seq("band", "bhash")))
       .as[(Long, Int, Long)].collect().toSet
-    MinhashBands.register(spark)
     val native = sets.select($"id",
-        posexplode(call_function("minhash_bands", $"hs", lit(bands), lit(rpb)))
+        posexplode(MinhashBands.of($"hs", bands, rpb))
           .as(Seq("band", "bhash")))
       .as[(Long, Int, Long)].collect().toSet
     assert(native == colForm && native.nonEmpty)
@@ -388,7 +387,6 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("simhash: expression equals model; identical docs at distance 0; near-dups close") {
-    SimHash.register(spark)
     val got = docs.select($"doc_id", Dedup.simhash($"text").as("fp"))
       .as[(Long, Long)].collect().toMap
     val model = docs.as[(Long, String)].collect()
@@ -403,7 +401,6 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("simhashPairs finds exact copies within hamming radius") {
-    SimHash.register(spark)
     val pairs = Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 3)
       .select("a", "b").as[(Long, Long)].collect().toSet
     assert(pairs.contains((3L, 1003L)))

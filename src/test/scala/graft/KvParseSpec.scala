@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.KvParseHelper
+import graft.functions.{KvParse, KvParseHelper}
 
 /** Truth table for the quoted key=value tokenizer (semantics of
   * pkg/parser/audit/audit.go:82-147).
@@ -63,7 +63,7 @@ class KvParseSpec extends AnyFunSuite {
       """type=SYSCALL exe="/usr/bin/x y" key='a b'""",
       "", "no pairs here")
     val got = inputs.toDF("s")
-      .selectExpr("kv_parse(s) AS m")
+      .select(KvParse.of($"s").as("m"))
       .as[Map[String, String]].collect().toSeq
     assert(got == inputs.map(parse))
   }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -78,7 +79,7 @@ class SimilaritySpec extends AnyFunSuite {
         array((0 until 24).map(b => Similarity.bandSketch(v, b, 4, mat)): _*).as("sk"))
       .as[(Long, Seq[Long])].collect().toMap
     val native = emb.select($"vec_id",
-        Similarity.allBandSketches(spark, v, 24, 4).as("sk"))
+        Similarity.allBandSketches(v, 24, 4).as("sk"))
       .as[(Long, Seq[Long])].collect().toMap
     assert(native == colForm)
   }
@@ -125,6 +126,33 @@ class SimilaritySpec extends AnyFunSuite {
     val r = emb.limit(1)
       .select(Similarity.dot(v, slice(v, 1, 3)).as("d")).collect().head
     assert(r.isNullAt(0))
+    // a null element nulls out too, as it nulls the interpreted sum
+    val vn = concat(array(lit(null).cast("double")), v)
+    val n = emb.limit(1)
+      .select(Similarity.dot(vn, vn).as("d"),
+        aggregate(zip_with(vn, vn, (x, y) => x * y), lit(0.0), (acc, x) => acc + x).as("i"))
+      .collect().head
+    assert(n.isNullAt(0) && n.isNullAt(1))
+  }
+
+  test("dot and l2norm build on a thread with no active or default session") {
+    var built: Seq[org.apache.spark.sql.Column] = Nil
+    var err: Throwable = null
+    val t = new Thread(() =>
+      try {
+        SparkSession.clearActiveSession()
+        SparkSession.clearDefaultSession()
+        val v = Similarity.toDoubleVec(col("embedding"))
+        built = Seq(Similarity.dot(v, reverse(v)), Similarity.l2norm(v))
+      } catch { case e: Throwable => err = e })
+    try { t.start(); t.join() } finally SparkSession.setDefaultSession(spark)
+    assert(err == null, s"Column construction needed a session: $err")
+    val v = Similarity.toDoubleVec($"embedding")
+    val mismatches = emb.select(built(0).as("d"), built(1).as("n"),
+        Similarity.dot(v, reverse(v)).as("d0"), Similarity.l2norm(v).as("n0"))
+      .filter($"d" =!= $"d0" || $"n" =!= $"n0" || $"d".isNull || $"n".isNull)
+      .count()
+    assert(mismatches == 0L)
   }
 
   test("cosine of a vector with itself is 1") {

@@ -17,7 +17,6 @@ object SparkTestSession {
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    graft.functions.KvParse.register(s)
     s
   }
 }
